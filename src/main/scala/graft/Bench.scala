@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Per-round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Methodology (VERDICT r1 item 9, hardened r5):
@@ -124,15 +124,11 @@ object Bench {
     val parallelismFirst: String = sys.env.get("SPARK_GRAFT_PARALLELISM_FIRST")
       .map(_.trim).filter(v => v == "true" || v == "false")
       .getOrElse("true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    // the product's session config, plus the two scale-ladder overrides
+    val spark = GraftSession.builder("graft-bench", cpus)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         parallelismFirst)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Optional subset (comma-separated names) for scale-curve runs and

@@ -36,19 +36,22 @@ object JobCount {
         }: Unit
       }
     })
+    // the listener bus is async: wait for every event posted so far, so
+    // no job of the untimed pass lands in the measured window or past it
+    def drain(): Unit = org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
     names.foreach { n =>
       // one untimed pass so codegen/scratch setup is not billed, then
       // reset counters and measure one clean pass
       SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
+      drain()
       jobs.set(0); stages.set(0); tasks.set(0)
       inputBytes.set(0); shuffleWrite.set(0)
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      // listener bus is async; give it a beat to drain before reading
-      Thread.sleep(300)
+      drain()
       println(f"JOBCOUNT $n jobs=${jobs.get}%d stages=${stages.get}%d " +
         f"tasks=${tasks.get}%d input_mb=${inputBytes.get / 1e6}%.1f " +
         f"shuffle_write_mb=${shuffleWrite.get / 1e6}%.2f sec=$sec%.3f")

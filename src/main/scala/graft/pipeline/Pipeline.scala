@@ -2,10 +2,13 @@ package graft.pipeline
 
 import java.io.File
 
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.classify.HeaderSniffer
+import graft.control.DriverPool
 import graft.operators.{Consolidate, KeepLastDedup}
 import graft.readers.{BookingPaymentReader, OccupancyReader, ReaderOutput, TrainListReader}
 import graft.schema.ReportType
@@ -65,38 +68,12 @@ object Pipeline {
   val DriverPoolParallelism: Int =
     math.max(1, math.min(16, Runtime.getRuntime.availableProcessors()))
 
-  /** Order-preserving parallel map on a bounded driver pool. Safe here
-    * because every work unit is independent and thread-compatible: each
-    * xlsx parse opens its own ZipFile, and Spark job submission /
-    * DataFrame construction are thread-safe on a shared session. Results
-    * (and therefore error accumulation downstream) keep input order, so
-    * the fan-out changes wall-clock only, never output.
+  /** Bound on each classify/read fan-out. Its units are independent and
+    * thread-compatible (each xlsx parse opens its own ZipFile; job
+    * submission is thread-safe on a shared session), so the fan-out
+    * changes wall time only, never output.
     */
-  private[pipeline] def parMap[A, B](xs: Seq[A], parallelism: Int)(f: A => B): Seq[B] =
-    if (parallelism <= 1 || xs.sizeIs <= 1) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, xs.size))
-      var failed = true
-      try {
-        val out = xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
-            def call(): B = f(x)
-          }))
-          .map { fut =>
-            try fut.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-          }
-        failed = false
-        out
-      } finally {
-        // on failure, drop the queued units too — a graceful shutdown()
-        // would let thousands of pending parses keep burning the driver
-        // (and block JVM exit on the non-daemon workers) after the
-        // caller has already thrown
-        if (failed) pool.shutdownNow() else pool.shutdown()
-        ()
-      }
-    }
+  private val FanOutTimeout = 6.hours
 
   private sealed trait SniffUnit
   private final case class CsvFile(path: String) extends SniffUnit
@@ -114,7 +91,8 @@ object Pipeline {
   def classifyAll(spark: SparkSession, inputDir: String,
       parallelism: Int = DriverPoolParallelism)
       : (Seq[ClassifiedInput], Seq[String]) = {
-    val books = parMap(discover(inputDir, ".xlsx"), parallelism) { p =>
+    val books = DriverPool.map(spark, discover(inputDir, ".xlsx"), parallelism,
+        FanOutTimeout) { p =>
       p -> (try graft.sources.Xlsx.sheetNames(p).indices.toSeq
             catch { case _: Exception => Seq.empty })
     }
@@ -124,7 +102,7 @@ object Pipeline {
           case (p, ss) if ss.isEmpty => Seq(DeadBook(p))
           case (p, ss)               => ss.map(XlsxSheet(p, _))
         }
-    val all = parMap(units, parallelism) {
+    val all = DriverPool.map(spark, units, parallelism, FanOutTimeout) {
       case CsvFile(p) =>
         HeaderSniffer.classifyCsv(spark, p) match {
           case Some((idx, rep)) => Right(ClassifiedInput(p, None, idx, rep))
@@ -246,8 +224,9 @@ object Pipeline {
         // per-(file, sheet) reads fan out on the driver pool: the xlsx
         // parses and per-input guard actions are the serial cost for a
         // workbook batch; order (and so the D1 fileOrd tiebreaker and
-        // error attribution) is preserved by parMap.
-        val reads = parMap(mine.zipWithIndex.toSeq, parallelism) {
+        // error attribution) is preserved by the pool.
+        val reads = DriverPool.map(spark, mine.zipWithIndex, parallelism,
+            FanOutTimeout) {
           case (ci, ord) =>
             (ci, readInput(spark, ci, ord, trainHours, history,
               eagerEmptyGuard = !batchedGuard))

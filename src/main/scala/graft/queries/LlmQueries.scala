@@ -965,8 +965,8 @@ object LlmQueries {
 
     // The DEPLOYED-configuration serve clock (VERDICT r19 item 3):
     // q194 freezes cells=4 BY DESIGN (it measures the artifact across
-    // scales); production deploys √N cells — the lever IvfServeScale
-    // measured (serve slope 0.047 at √N vs 0.51 frozen). This gate is
+    // scales); production deploys √N cells — the lever SCALE.md records
+    // (serve slope 0.047 at √N vs 0.51 frozen). This gate is
     // the standing bench entry for that deployed shape: index built
     // once per (session, sfDir) at cells = ⌊√N⌋, and every timed pass
     // runs the full serve CYCLE — the staleness audit (the r18

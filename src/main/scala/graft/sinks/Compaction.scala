@@ -2,8 +2,12 @@ package graft.sinks
 
 import java.net.URI
 
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.control.DriverPool
 
 /** Small-file compaction — the table-maintenance pass every long-lived
   * 100 TB corpus needs: streaming ingest, per-day partition overwrites,
@@ -137,32 +141,10 @@ object Compaction {
     // tmp sibling, and Spark happily schedules several small jobs at
     // once — sequential leaves left most of the cluster idle during
     // every leaf's output-commit tail. Results keep the sorted-leaf
-    // order; a single failure propagates after the pool drains (any
-    // already-swapped leaves are complete, unswapped ones untouched —
-    // the same crash surface the sequential loop had between leaves).
-    if (parts.length <= 1) parts.toIndexedSeq.map(one)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, parts.length))
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        // bounded, not Inf: a wedged leaf job (hung FS call, deadlocked
-        // commit) should fail the maintenance op loudly instead of
-        // hanging the driver forever; generous enough that no
-        // legitimate leaf rewrite can trip it. Failures are captured
-        // per leaf and the first rethrown only after EVERY in-flight
-        // leaf finished its swap — a bare Future.sequence fails fast,
-        // which would surface the error while a healthy neighbor is
-        // mid delete+rename.
-        val tries = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            parts.toIndexedSeq.map(p =>
-              scala.concurrent.Future(scala.util.Try(one(p))))),
-          scala.concurrent.duration.Duration(6, "hours"))
-        tries.foreach(t => if (t.isFailure) throw t.failed.get)
-        tries.map(_.get)
-      } finally pool.shutdown()
-    }
+    // order; a single failure propagates after every in-flight leaf
+    // finished its swap (already-swapped leaves are complete, unswapped
+    // ones untouched — the same crash surface the sequential loop had
+    // between leaves). The 6 h bound fails a wedged leaf job loudly.
+    DriverPool.map(spark, parts.toIndexedSeq, 8, 6.hours)(one)
   }
 }

@@ -1,8 +1,12 @@
 package graft.sinks
 
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.control.DriverPool
 
 /** Targeted delete-by-key over a stats-manifested parquet directory
   * ([[DataSkipping]]): the erasure/right-to-be-forgotten primitive.
@@ -348,7 +352,12 @@ object Erasure {
             .toIndexedSeq
           srcName -> parts
         }.toMap
-    val rowCounts = parquetRowCounts(stagedBySrc.values.flatten.toIndexedSeq, conf)
+    // footer row counts over a bounded pool: each read is an independent
+    // metadata RPC, and a sequential loop would pay O(hits) object-store
+    // round-trips one after another
+    val stagedFiles = stagedBySrc.values.flatten.toIndexedSeq
+    val rowCounts = stagedFiles.zip(
+      DriverPool.map(spark, stagedFiles, 16, 6.hours)(parquetRowCount(_, conf))).toMap
     var replacedOld = List.empty[String]
     var replacedNew = List.empty[String]
     var emptied = List.empty[String]
@@ -388,30 +397,6 @@ object Erasure {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
-  }
-
-  /** Footer row counts for the whole staged file list over a BOUNDED
-    * thread pool: each footer read is an independent metadata RPC, and
-    * a sequential driver loop serializes O(hits) of them — a 100k-hit
-    * erasure on an object store would pay ~100k round-trips one after
-    * another. 16 concurrent readers keeps the driver light while
-    * collapsing the wall time to hits/16 RPC rounds; local FS reads
-    * are fast either way, so the pool only ever helps.
-    */
-  private def parquetRowCounts(paths: IndexedSeq[Path],
-      conf: org.apache.hadoop.conf.Configuration): Map[Path, Long] = {
-    if (paths.isEmpty) return Map.empty
-    if (paths.size == 1) return Map(paths.head -> parquetRowCount(paths.head, conf))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, paths.size))
-    try {
-      val futures = paths.map { p =>
-        p -> pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = parquetRowCount(p, conf)
-        })
-      }
-      futures.map { case (p, f) => p -> f.get() }.toMap
-    } finally pool.shutdownNow(): Unit
   }
 
   /** Post-commit physical delete of files a drop pass emptied (and,

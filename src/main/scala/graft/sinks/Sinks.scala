@@ -1,8 +1,11 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.control.DriverPool
 import graft.operators.DateStreaks
 
 /** K1-K3 — side-channel CSV sinks (error rows, duplicates, snapshot).
@@ -143,7 +146,6 @@ object PartitionOverwriteSink {
     // persist so the upstream chain runs once, release before returning.
     val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       val colocated =
         if (filesPerDay == 1) pinned.repartition(col(dateCol))
         else pinned.repartition(col(dateCol),
@@ -158,42 +160,42 @@ object PartitionOverwriteSink {
       // commits: an audit row asserts a completed load, and a write
       // failure must not leave one behind (K6's failure semantics).
       // Job descriptions are thread-local, so each job stays labeled.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      val streaksFut = scala.concurrent.Future {
-        spark.sparkContext.setJobDescription(s"load $table: day streaks")
-        DateStreaks(pinned.select(to_date(col(dateCol)).as("d")), "d")
-          .orderBy(col("streak_start")).collect()
-      }(scala.concurrent.ExecutionContext.fromExecutorService(pool))
+      val streakRows = DriverPool.map(spark, Seq(true, false), 2, 1.hour) { write =>
+        if (write) { // dynamic overwrite scoped to this writer, not the session
+          colocated.write.mode(SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(dateCol).parquet(targetDir)
+          Array.empty[Row]
+        } else {
+          spark.sparkContext.setJobDescription(s"load $table: day streaks")
+          DateStreaks(pinned.select(to_date(col(dateCol)).as("d")), "d")
+            .orderBy(col("streak_start")).collect()
+        }
+      }(1)
 
-      try {
-        colocated.write.mode(SaveMode.Overwrite).partitionBy(dateCol).parquet(targetDir)
+      // G1 — streaks over the loaded days; tiny (O(days)) driver list.
+      val streaks = streakRows.toIndexedSeq.map(r =>
+        (r.getDate(0).toString, r.getDate(1).toString))
+      // Streaks are maximal consecutive runs, so expanding them enumerates
+      // exactly the distinct loaded days — no second scan needed.
+      val days = streaks.flatMap { case (a, b) =>
+        Iterator.iterate(java.time.LocalDate.parse(a))(_.plusDays(1))
+          .takeWhile(!_.isAfter(java.time.LocalDate.parse(b)))
+          .map(_.toString).toSeq
+      }.sorted
 
-        // G1 — streaks over the loaded days; tiny (O(days)) driver list.
-        val streakRows = scala.concurrent.Await.result(streaksFut,
-          scala.concurrent.duration.Duration(1, "hour"))
-        val streaks = streakRows.toIndexedSeq.map(r =>
-          (r.getDate(0).toString, r.getDate(1).toString))
-        // Streaks are maximal consecutive runs, so expanding them enumerates
-        // exactly the distinct loaded days — no second scan needed.
-        val days = streaks.flatMap { case (a, b) =>
-          Iterator.iterate(java.time.LocalDate.parse(a))(_.plusDays(1))
-            .takeWhile(!_.isAfter(java.time.LocalDate.parse(b)))
-            .map(_.toString).toSeq
-        }.sorted
+      // K6 — one audit row per loaded day. The driver-local day list
+      // parallelizes over defaultParallelism, which would append one
+      // tiny file PER CORE per load; coalesce(1) lands the audit batch
+      // as a single file (audit tables are day-count-sized at any scale).
+      import spark.implicits._
+      days.toDF("period")
+        .coalesce(1)
+        .select(lit(runStamp).as("run_timestamp"), lit(table).as("table"),
+          lit("overwrite").as("operation"), col("period"), lit(user).as("user"))
+        .write.mode(SaveMode.Append).parquet(auditDir)
 
-        // K6 — one audit row per loaded day. The driver-local day list
-        // parallelizes over defaultParallelism, which would append one
-        // tiny file PER CORE per load; coalesce(1) lands the audit batch
-        // as a single file (audit tables are day-count-sized at any scale).
-        import spark.implicits._
-        days.toDF("period")
-          .coalesce(1)
-          .select(lit(runStamp).as("run_timestamp"), lit(table).as("table"),
-            lit("overwrite").as("operation"), col("period"), lit(user).as("user"))
-          .write.mode(SaveMode.Append).parquet(auditDir)
-
-        LoadReport(days, streaks, gaps = math.max(0, streaks.size - 1))
-      } finally pool.shutdown()
+      LoadReport(days, streaks, gaps = math.max(0, streaks.size - 1))
     } finally pinned.unpersist()
   }
 }
